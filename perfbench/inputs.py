@@ -111,6 +111,11 @@ def seed_files(pool: str, seed: int) -> list[str]:
     return files[s : s + SLICE_FILES]
 
 
+def num_rows(files: list[str]) -> int:
+    """Rows in parquet files, from their footers (no Spark job)."""
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
 def bench_table(docs):
     """Decontamination eval set: the first 12 tokens of every 199th doc,
     as in scripts/textops_bench.py."""
@@ -158,7 +163,7 @@ def make_geo_dims(seed: int, out: str) -> dict:
             pq.write_table(
                 t.slice(i * step, step), os.path.join(paths[name], f"part-{i:05d}.parquet")
             )
-    return {"paths": paths, "extents_pdf": ext_pdf, "queries_pdf": q_pdf}
+    return {"paths": paths, "extents_pdf": ext_pdf, "queries_pdf": q_pdf, "raster_pdf": raster}
 
 
 def make_stream_files(page_paths: list[str], out: str) -> int:

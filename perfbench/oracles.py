@@ -126,6 +126,7 @@ class GeoOracle:
         )
         self._expected = None
         self._geocoded = False
+        self._n_cells = None
 
     def _reference(self, enriched: str) -> None:
         """kNN and PIP answers over a checked enriched table."""
@@ -183,6 +184,15 @@ class GeoOracle:
         if only_got or only_ref:
             bad.append(f"assign: geocode differs from the rule table ({only_got}/{only_ref} rows)")
             return bad
+        if self._n_cells is None:
+            from gips_spark.functions import cellindex
+
+            g = con.execute("SELECT lat, lon FROM geo_ref WHERE geocode_src <> 'none'").df()
+            self._n_cells = len(np.unique(cellindex.latlng_to_cell(
+                g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64), 7
+            )))
+        if res["n_cells"] != self._n_cells:
+            bad.append(f"cell_directory: {res['n_cells']} cells, {self._n_cells} in the recount")
         if self._expected is None:
             self._reference(res["enriched"])
         knn = con.execute(
@@ -301,4 +311,225 @@ FROM dg JOIN bg USING (gram) GROUP BY doc_id, n_grams
     only_got, only_ref = _diff_count(con, got, ref)
     if only_got or only_ref:
         return [f"decontaminate: {only_got}/{only_ref} rows differ from SQL n-gram join"]
+    return []
+
+
+def _mismatches(con, got: str, ref: str, key: list[str], cols: list[str],
+                tol: float) -> tuple[int, int]:
+    """Rows of ``got`` and ``ref`` (SQL) whose keys do not pair up, or
+    whose ``cols`` differ by more than ``tol``; and the rows compared."""
+    on = " AND ".join(f"g.{k} = r.{k}" for k in key)
+    diff = " OR ".join(
+        f"(g.{c} IS NULL) <> (r.{c} IS NULL) OR abs(g.{c} - r.{c}) > {tol}" for c in cols
+    )
+    return con.execute(
+        f"""SELECT count(*) FILTER (WHERE g.{key[0]} IS NULL OR r.{key[0]} IS NULL OR {diff}),
+                   count(*)
+            FROM ({got}) g FULL OUTER JOIN ({ref}) r ON {on}"""
+    ).fetchone()
+
+
+_REPETITION_COLS = [
+    "n_chars", "n_lines", "dup_line_frac", "dup_line_char_frac",
+    "top2_char_frac", "top3_char_frac", "dup5_char_frac",
+]
+
+
+def check_repetition(con, doc_files: list[str], res_path: str) -> list[str]:
+    """textops.repetition_stats (defaults: top 2/3-grams, dup 5-grams)
+    recomputed from unnested lines and word n-grams, as in the entry
+    oracle."""
+    def grams(n: int) -> str:
+        return (
+            f"unnest(CASE WHEN len(toks) < {n} THEN CAST([] AS VARCHAR[]) ELSE "
+            f"list_transform(range(1, len(toks) - {n - 2}), "
+            f"i -> array_to_string(list_slice(toks, i, i + {n - 1}), ' ')) END)"
+        )
+
+    ref = f"""
+WITH base AS (SELECT doc_id, coalesce(text, '') AS text FROM {_files(doc_files)}),
+tk AS (
+  SELECT doc_id, length(text) AS n_chars,
+         list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks,
+         list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lns
+  FROM base),
+units AS (
+  SELECT doc_id, n_chars, 'line' AS kind, unnest(lns) AS gram FROM tk
+  UNION ALL SELECT doc_id, n_chars, 'g2', {grams(2)} FROM tk
+  UNION ALL SELECT doc_id, n_chars, 'g3', {grams(3)} FROM tk
+  UNION ALL SELECT doc_id, n_chars, 'g5', {grams(5)} FROM tk),
+counted AS (
+  SELECT doc_id, n_chars, kind, gram, count(*) AS cnt FROM units
+  GROUP BY doc_id, n_chars, kind, gram),
+perk AS (
+  SELECT doc_id, n_chars, kind, sum(cnt) AS n_units, count(*) AS n_distinct,
+         sum(CASE WHEN cnt >= 2 THEN cnt * length(gram) ELSE 0 END) AS dup_chars
+  FROM counted GROUP BY doc_id, n_chars, kind),
+tops AS (
+  SELECT doc_id, kind, cnt * length(gram) AS top_cov
+  FROM (SELECT *, row_number() OVER (PARTITION BY doc_id, kind
+                                     ORDER BY cnt DESC, gram ASC) AS rn FROM counted)
+  WHERE rn = 1),
+frac AS (
+  SELECT p.doc_id, p.kind, p.n_units, p.n_distinct,
+         least(p.dup_chars / CAST(greatest(p.n_chars, 1) AS DOUBLE), 1.0) AS dup_frac,
+         least(t.top_cov / CAST(greatest(p.n_chars, 1) AS DOUBLE), 1.0) AS top_frac
+  FROM perk p JOIN tops t USING (doc_id, kind)),
+stats AS (
+  SELECT doc_id,
+    max(n_units) FILTER (WHERE kind = 'line') AS n_lines,
+    max((n_units - n_distinct) / CAST(n_units AS DOUBLE)) FILTER (WHERE kind = 'line')
+      AS dup_line_frac,
+    max(dup_frac) FILTER (WHERE kind = 'line') AS dup_line_char_frac,
+    max(top_frac) FILTER (WHERE kind = 'g2') AS top2_char_frac,
+    max(top_frac) FILTER (WHERE kind = 'g3') AS top3_char_frac,
+    max(dup_frac) FILTER (WHERE kind = 'g5') AS dup5_char_frac
+  FROM frac GROUP BY doc_id)
+SELECT b.doc_id, length(b.text) AS n_chars, coalesce(s.n_lines, 0) AS n_lines,
+       {", ".join(f"coalesce(s.{c}, 0.0) AS {c}" for c in _REPETITION_COLS[2:])}
+FROM base b LEFT JOIN stats s USING (doc_id)
+"""
+    got = f"SELECT doc_id, {', '.join(_REPETITION_COLS)} FROM {_pq(res_path)}"
+    wrong, n = _mismatches(con, got, ref, ["doc_id"], _REPETITION_COLS, 1e-8)
+    if wrong:
+        return [f"repetition: {wrong} of {n} docs differ from SQL unit counts"]
+    return []
+
+
+_ENTROPY_COLS = [
+    "n_chars", "n_tokens", "char_distinct", "token_distinct",
+    "char_entropy", "token_entropy", "token_ttr",
+]
+
+
+def check_entropy(con, doc_files: list[str], res_path: str) -> list[str]:
+    """textops.entropy_stats recomputed from unnested symbol counts, as
+    in the entry oracle.  The engine rounds to 6 places and the
+    reference does not."""
+    ref = f"""
+WITH base AS (SELECT doc_id, coalesce(text, '') AS text FROM {_files(doc_files)}),
+prep AS (
+  SELECT doc_id,
+         CASE WHEN length(text) = 0 THEN CAST([] AS VARCHAR[])
+              ELSE string_split(text, '') END AS cs,
+         list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS tk
+  FROM base),
+ccnt AS (SELECT doc_id, u, count(*) AS c
+         FROM (SELECT doc_id, unnest(cs) AS u FROM prep) GROUP BY doc_id, u),
+tcnt AS (SELECT doc_id, u, count(*) AS c
+         FROM (SELECT doc_id, unnest(tk) AS u FROM prep) GROUP BY doc_id, u),
+cn AS (SELECT doc_id, sum(c) AS n, count(*) AS nd FROM ccnt GROUP BY doc_id),
+tn AS (SELECT doc_id, sum(c) AS n, count(*) AS nd FROM tcnt GROUP BY doc_id),
+ch AS (SELECT doc_id, -sum(c / CAST(n AS DOUBLE) * ln(c / CAST(n AS DOUBLE))) AS h
+       FROM ccnt JOIN cn USING (doc_id) GROUP BY doc_id),
+th AS (SELECT doc_id, -sum(c / CAST(n AS DOUBLE) * ln(c / CAST(n AS DOUBLE))) AS h
+       FROM tcnt JOIN tn USING (doc_id) GROUP BY doc_id)
+SELECT p.doc_id,
+       coalesce(cn.n, 0) AS n_chars, coalesce(tn.n, 0) AS n_tokens,
+       coalesce(cn.nd, 0) AS char_distinct, coalesce(tn.nd, 0) AS token_distinct,
+       coalesce(ch.h, 0.0) AS char_entropy, coalesce(th.h, 0.0) AS token_entropy,
+       CASE WHEN coalesce(tn.n, 0) = 0 THEN 0.0 ELSE tn.nd / CAST(tn.n AS DOUBLE) END
+         AS token_ttr
+FROM prep p LEFT JOIN cn USING (doc_id) LEFT JOIN ch USING (doc_id)
+            LEFT JOIN tn USING (doc_id) LEFT JOIN th USING (doc_id)
+"""
+    got = f"SELECT doc_id, {', '.join(_ENTROPY_COLS)} FROM {_pq(res_path)}"
+    wrong, n = _mismatches(con, got, ref, ["doc_id"], _ENTROPY_COLS, 1.5e-6)
+    if wrong:
+        return [f"entropy: {wrong} of {n} docs differ from SQL symbol counts"]
+    return []
+
+
+def _products(bands: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
+    """The four default zonal products, by their published formulas."""
+    b, g, r, n = bands["blue"], bands["green"], bands["red"], bands["nir"]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return {
+            "ndvi": (n - r) / (n + r),
+            "evi": 2.5 * (n - r) / (n + 6.0 * r - 7.5 * b + 1.0),
+            "ndwi": (g - n) / (g + n),
+            "msavi2": (2.0 * n + 1.0 - np.sqrt((2.0 * n + 1.0) ** 2 - 8.0 * (n - r))) / 2.0,
+        }
+
+
+def _inside(rings, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
+    """Even-odd ray cast over every edge of every ring."""
+    inside = np.zeros(lon.shape, dtype=bool)
+    for ring in rings:
+        pts = [(p["lon"], p["lat"]) for p in ring]
+        for i, (x1, y1) in enumerate(pts):
+            x2, y2 = pts[(i + 1) % len(pts)]
+            if y1 == y2:
+                continue
+            crosses = ((y1 > lat) != (y2 > lat)) & (lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1))
+            inside ^= crosses
+    return inside
+
+
+def zonal_reference(raster_pdf: pd.DataFrame, extents_pdf: pd.DataFrame) -> pd.DataFrame:
+    """(extent_id, scene_id, band, count, min, max, mean, stddev, skew)
+    for the default products over every extent, from the raw band chunks:
+    nodata pixels masked, non-finite products written back as nodata and
+    stored as float32, pixel centres ray-cast against the extent rings."""
+    rows = []
+    for (scene, _chunk), grp in raster_pdf.groupby(["scene_id", "chunk_id"], sort=False):
+        first = grp.iloc[0]
+        nd32 = float(np.float32(first["nodata"]))
+        bands = {}
+        for band, px in zip(grp["band"], grp["pixels"]):
+            px = np.asarray(px, dtype=np.float64)
+            bands[band] = np.where(px == nd32, np.nan, px)
+        gt, w, h = list(first["gt"]), int(first["w"]), int(first["h"])
+        lon = gt[0] + (np.arange(w) + int(first["x0"]) + 0.5) * gt[1]
+        lat = gt[3] + (np.arange(h) + int(first["y0"]) + 0.5) * gt[5]
+        lon, lat = np.meshgrid(lon, lat)
+        lon, lat = lon.ravel(), lat.ravel()
+        products = {
+            p: np.where(np.isfinite(v), v, first["nodata"]).astype(np.float32).astype(np.float64)
+            for p, v in _products(bands).items()
+        }
+        for eid, rings in zip(extents_pdf["extent_id"], extents_pdf["rings"]):
+            inside = _inside(rings, lon, lat)
+            if not inside.any():
+                continue
+            for p, v in products.items():
+                v = v[inside & (v != nd32)]
+                if v.size:
+                    rows.append((eid, scene, p, v))
+    out = []
+    cat = {}
+    for eid, scene, p, v in rows:
+        cat.setdefault((eid, scene, p), []).append(v)
+    for (eid, scene, p), parts in cat.items():
+        v = np.concatenate(parts)
+        n = v.size
+        d = v - v.mean()
+        m2, m3 = (d**2).mean(), (d**3).mean()
+        out.append({
+            "extent_id": eid, "scene_id": scene, "band": p, "count": n,
+            "min": v.min(), "max": v.max(), "mean": v.mean(),
+            "stddev": v.std(ddof=1) if n > 1 else None,
+            "skew": m3 / m2**1.5 if m2 > 1e-12 else None,
+        })
+    return pd.DataFrame(out)
+
+
+def check_zonal(con, ref: pd.DataFrame, res_path: str) -> list[str]:
+    """zonal_stats over compute_products against ``zonal_reference``:
+    counts exact, moments to a relative 1e-6."""
+    con.register("zonal_ref", ref)
+    cols = ["count", "min", "max", "mean", "stddev", "skew"]
+    rel = " OR ".join(
+        f'(g."{c}" IS NULL) <> (r."{c}" IS NULL) '
+        f'OR abs(g."{c}" - r."{c}") > 1e-6 * greatest(1.0, abs(r."{c}"))'
+        for c in cols
+    )
+    wrong, n = con.execute(
+        f"""SELECT count(*) FILTER (WHERE g.extent_id IS NULL OR r.extent_id IS NULL OR {rel}),
+                   count(*)
+            FROM {_pq(res_path)} g FULL OUTER JOIN zonal_ref r
+            ON g.extent_id = r.extent_id AND g.scene_id = r.scene_id AND g.band = r.band"""
+    ).fetchone()
+    if wrong:
+        return [f"zonal: {wrong} of {n} (extent, scene, product) rows differ from numpy"]
     return []

@@ -4,17 +4,19 @@ at a time, at local[<cores>].
     python3 perfbench/run.py --workload assign_query --seed 1 --seconds 15 --trace 0
 
 Run from the root of a checkout.  Set-up starts Spark, selects the
-seed's inputs and warms up until pass time stops falling; then passes
-run back to back for ``--seconds``, at least one.  Outputs of every timed pass are
-checked with DuckDB afterwards (perfbench/oracles.py).  The last line
-of stdout is the result JSON; the line before it is the run record
-(stamps, input sizes, every sample).
+seed's inputs and runs the workload's fixed number of warm-up passes
+(``warm_passes``); then passes run back to back for ``--seconds``, at
+least one.  The outputs of every pass, warm-up passes included, are
+checked with DuckDB afterwards (perfbench/oracles.py), so a run checks
+at least two passes.  The last line of stdout is the result JSON; the
+line before it is the run record (stamps, input sizes, every sample).
 
 ``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` is the
 traced run: it measures the workload untraced for half the window,
-restarts the SparkContext with the event log on, warms up again,
-measures it traced for the other half, then runs one traced pass of
-the other workload so that every layer is covered; it reports the per-layer metrics
+restarts the SparkContext with the event log on, runs one warm-up pass
+of the other workload, measures the workload traced for the other
+half, then runs one traced pass of the other workload so that every
+layer is covered; it reports the per-layer metrics
 (perfbench/eventlog.py) plus ``trace.coverage`` and
 ``trace.overhead_frac``.  See perfbench/METRICS.md.
 """
@@ -32,11 +34,6 @@ import sys
 import time
 
 REPO = os.getcwd()
-LOAD_REPEATS = 3
-WARM_MAX = 1
-#: warm-up stops once a pass is no more than this much faster than the
-#: one before
-WARM_TOL = 0.10
 
 
 def _args(argv):
@@ -85,6 +82,7 @@ class Ctx:
         self.session, self.tracer, self.dirs, self.seed = session, tracer, dirs, seed
         self.pools = None
         self.stream = None
+        self.traced_since = 0.0
 
     @property
     def spark(self):
@@ -92,20 +90,35 @@ class Ctx:
 
 
 class Runner:
-    """Runs passes of one workload and keeps what they produced."""
+    """Runs passes of one workload and keeps what they produced.
+
+    ``results`` holds the output of every pass that returned, warm-up
+    passes included, for the checks; ``timed`` holds (pass id, seconds)
+    of the timed passes only."""
 
     def __init__(self, ctx, wl, inp):
         self.ctx, self.wl, self.inp = ctx, wl, inp
         self.results: list[tuple[str, dict]] = []
-        self.times: list[float] = []
+        self.timed: list[tuple[str, float]] = []
         self.failed = 0
         self.jvm_died = False
-        self.untraced_times: list[float] = []
 
-    def one(self, tag: str, keep: bool = True) -> float | None:
+    def pid(self, tag: str) -> str:
+        return f"{self.wl.name}-{tag}"
+
+    def in_loop(self, pid: str, tag: str) -> bool:
+        """Whether ``pid`` is a pass of the loop tagged ``tag``."""
+        head = self.pid(tag)
+        return pid.startswith(head) and pid[len(head):].isdigit()
+
+    def times(self, tag: str) -> list[float]:
+        """Durations of the timed passes of the loop tagged ``tag``."""
+        return [dt for pid, dt in self.timed if self.in_loop(pid, tag)]
+
+    def one(self, tag: str, timed: bool = True) -> None:
         from perfbench.harness import JvmDied
 
-        pid = f"{self.wl.name}-{tag}"
+        pid = self.pid(tag)
         t0 = time.monotonic()
         try:
             with self.ctx.tracer.span("pass", pid):
@@ -115,22 +128,17 @@ class Runner:
                 raise JvmDied(f"Spark JVM died during pass {pid}") from exc
             print(f"perfbench: pass {pid} failed: {exc!r}", file=sys.stderr)
             self.failed += 1
-            return None
+            return
         dt = time.monotonic() - t0
         print(f"perfbench: pass {pid} {dt:.3f} s", file=sys.stderr)
-        if keep:
-            self.times.append(dt)
-            self.results.append((pid, res))
-        return dt
+        self.results.append((pid, res))
+        if timed:
+            self.timed.append((pid, dt))
 
-    def warm(self) -> float:
-        t0, prev = time.monotonic(), None
-        for i in range(WARM_MAX):
-            dt = self.one(f"warm{i}", keep=False)
-            if dt is None or (prev is not None and dt > prev * (1 - WARM_TOL)):
-                break
-            prev = dt
-        return time.monotonic() - t0
+    def warm(self, passes: int, tag: str = "warm") -> None:
+        """Untimed passes; their outputs are still checked."""
+        for i in range(passes):
+            self.one(f"{tag}{i}", timed=False)
 
     def loop(self, seconds: float, tag: str) -> None:
         """Closed loop: passes back to back until ``seconds`` have passed,
@@ -146,24 +154,11 @@ class Runner:
                       file=sys.stderr)
                 self.jvm_died = True
                 left = max(0.0, seconds - (time.monotonic() - t0))
-                per = statistics.median(self.times) if self.times else seconds
+                done = self.times(tag)
+                per = statistics.median(done) if done else seconds
                 self.failed += 1 + int(left // max(per, 1e-3))
                 return
             n += 1
-
-
-def _setup(ctx, wl, repeats: int) -> tuple[dict, float, float]:
-    """Generate the workload's inputs, then load them ``repeats`` times.
-    Returns the inputs, the generation time and the median load time."""
-    t0 = time.monotonic()
-    inp = wl.prepare(ctx, ctx.dirs.path("inputs", wl.name))
-    gen_s = time.monotonic() - t0
-    times = []
-    for _ in range(repeats):
-        t0 = time.monotonic()
-        wl.load(ctx, inp)
-        times.append(time.monotonic() - t0)
-    return inp, gen_s, statistics.median(times)
 
 
 def _check(wl_name: str, runner) -> int:
@@ -180,16 +175,21 @@ def _check(wl_name: str, runner) -> int:
     return bad
 
 
-def _layer_metrics(ctx, runners, own) -> dict[str, float]:
+def _layer_metrics(ctx, runners, own) -> tuple[dict[str, float], dict[str, float]]:
+    """Per-layer metrics of the traced passes, and trace coverage per
+    workload."""
     from perfbench import eventlog
 
-    spans = ctx.tracer.spans
-    traced = [s for s in spans if s["start"] >= ctx.traced_since]
+    traced = [s for s in ctx.tracer.spans if s["start"] >= ctx.traced_since]
     stats = eventlog.parse(ctx.dirs.path("events"), traced)
-    per_wl: dict[str, dict[str, list[float]]] = {}
-    cover = []
+    out: dict[str, float] = {}
+    cover: dict[str, float] = {}
     for r in runners:
+        vals: dict[str, list[float]] = {}
+        cov = []
         for pid, res in r.results:
+            if not r.in_loop(pid, "tr"):
+                continue
             ps = [s for s in traced if s["pass"] == pid]
             root = next((s for s in ps if s["name"] == "pass"), None)
             if root is None:
@@ -201,23 +201,23 @@ def _layer_metrics(ctx, runners, own) -> dict[str, float]:
                     int(r.inp["queries_pdf"]["k"].sum()) if "queries_pdf" in r.inp else 0
                 ),
             }
-            m = eventlog.pass_metrics(ps, stats, extra)
-            for k, v in m.items():
-                per_wl.setdefault(r.wl.name, {}).setdefault(k, []).append(v)
-            cover.append(eventlog.coverage(root, [s for s in ps if s["parent"] == root["group"]]))
-    out: dict[str, float] = {}
-    for vals in per_wl.values():
+            for k, v in eventlog.pass_metrics(ps, stats, extra).items():
+                vals.setdefault(k, []).append(v)
+            cov.append(eventlog.coverage(root, [s for s in ps if s["parent"] == root["group"]]))
         for k, v in vals.items():
             med = statistics.median(v)
             # functions.* is measured in both workloads: sum one pass of each
             out[k] = out.get(k, 0.0) + med if k.startswith("functions.") else med
-    out["trace.coverage"] = statistics.median(cover) if cover else 0.0
-    traced_own = own.times[len(own.untraced_times):]
+        if cov:
+            cover[r.wl.name] = statistics.median(cov)
+    # the workload whose spans explain least of its pass time
+    out["trace.coverage"] = min(cover.values(), default=0.0)
+    traced_own, untraced_own = own.times("tr"), own.times("u")
     out["trace.overhead_frac"] = (
-        statistics.median(traced_own) / statistics.median(own.untraced_times) - 1.0
-        if traced_own and own.untraced_times else 0.0
+        statistics.median(traced_own) / statistics.median(untraced_own) - 1.0
+        if traced_own and untraced_own else 0.0
     )
-    return out
+    return out, cover
 
 
 def run(args) -> tuple[dict, dict]:
@@ -234,6 +234,10 @@ def run(args) -> tuple[dict, dict]:
         dirs.close()
 
 
+def _prepare(ctx, wl):
+    return Runner(ctx, wl, wl.prepare(ctx, ctx.dirs.path("inputs", wl.name)))
+
+
 def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
     from perfbench import inputs
     from perfbench.harness import JvmDied, MemorySampler, Session, Tracer
@@ -243,49 +247,44 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
     ctx = Ctx(session, Tracer(session), dirs, args.seed)
     runners, own = [], None
     jvm_died = False
-    setup_s = peak_mb = 0.0
-    try:
+    setup: dict[str, float] = {}
+    peak_mb = 0.0
+
+    def timed(part, fn):
         t0 = time.monotonic()
-        session.start(event_log=False)
+        out = fn()
+        setup[part] = time.monotonic() - t0
+        return out
+
+    try:
+        timed("session_s", lambda: session.start(event_log=False))
         ctx.stream = StreamProgress()
         ctx.stream.attach(ctx.spark)
-        session_s = time.monotonic() - t0
-        t0 = time.monotonic()
-        ctx.pools = inputs.pools(ctx.spark, REPO)
-        pool_s = time.monotonic() - t0
-
+        ctx.pools = timed("pool_s", lambda: inputs.pools(ctx.spark, REPO))
+        own = timed("prepare_s", lambda: _prepare(ctx, wl))
+        runners.append(own)
+        timed("warm_s", lambda: own.warm(wl.warm_passes))
         if not args.trace:
-            inp, gen_s, load_s = _setup(ctx, wl, LOAD_REPEATS)
-            own = Runner(ctx, wl, inp)
-            runners.append(own)
-            warm_s = own.warm()
             with MemorySampler() as mem:
                 mem.active.set()
                 own.loop(args.seconds, "t")
                 mem.active.clear()
-            record["setup"] = {
-                "session_s": session_s, "pool_s": pool_s, "gen_s": gen_s,
-                "load_s": load_s, "load_repeats": LOAD_REPEATS, "warm_s": warm_s,
-            }
-            setup_s = session_s + pool_s + gen_s + load_s + warm_s
             peak_mb = mem.peak_mb
             record["peak_mb"] = {
                 "jvm": mem.peak_jvm_kb / 1024, "python": mem.peak_python_kb / 1024,
             }
         else:
-            other = next(w for w in WORKLOADS.values() if w is not wl)
-            own = Runner(ctx, wl, _setup(ctx, wl, 1)[0])
-            alt = Runner(ctx, other, _setup(ctx, other, 1)[0])
-            runners += [own, alt]
-            own.warm()
+            alt = _prepare(ctx, next(w for w in WORKLOADS.values() if w is not wl))
+            runners.append(alt)
             own.loop(args.seconds / 2, "u")
-            own.untraced_times = list(own.times)
             session.restart(event_log=True)
             ctx.stream.attach(ctx.spark)
             for r in runners:
                 r.wl.load(ctx, r.inp)
             ctx.traced_since = time.time()
-            own.warm()  # the new context restarts the Python workers
+            # the other workload's warm-up pass also starts the new
+            # context's Python workers
+            alt.warm(1)
             own.loop(args.seconds / 2, "tr")
             alt.loop(0, "tr")
     except JvmDied as exc:
@@ -295,6 +294,7 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
     finally:
         session.stop()
     jvm_died = jvm_died or any(r.jvm_died for r in runners)
+    record["setup"] = setup
 
     t0 = time.monotonic()
     bad = sum(_check(r.wl.name, r) for r in runners)
@@ -304,17 +304,20 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
     if jvm_died:
         attempted, failed = max(attempted, 1), max(failed, 1)
     record["sizes"] = {r.wl.name: r.wl.sizes(r.inp) for r in runners}
+    record["passes"] = {r.wl.name: dict(r.timed) for r in runners}
     if own is None:
         metrics = {}
     elif args.trace:
-        metrics = {} if jvm_died else {
-            k: {"value": v} for k, v in _layer_metrics(ctx, runners, own).items()
-        }
+        metrics = {}
+        if not jvm_died:
+            layer, cover = _layer_metrics(ctx, runners, own)
+            metrics = {k: {"value": v} for k, v in layer.items()}
+            record["trace_coverage"] = cover
     else:
-        job_s = statistics.median(own.times) if own.times else 0.0
+        times = own.times("t")
+        job_s = statistics.median(times) if times else 0.0
         rows = wl.rows(own.inp)
-        record["samples"] = {"job_s": own.times, "passes": len(own.times)}
-        timed_ids = {pid for pid, _ in own.results}
+        timed_ids = {pid for pid, _ in own.timed}
         layer_s: dict[str, list[float]] = {}
         for s in ctx.tracer.spans:
             if s["pass"] in timed_ids and s["name"] != "pass":
@@ -323,12 +326,13 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
         record["rows_per_pass"] = rows
         if wl.name == "text_stream":
             trig = [p["duration_ms"].get("triggerExecution", 0) / 1e3
-                    for _, res in own.results for p in res["progress"] if p["rows"]]
+                    for pid, res in own.results if pid in timed_ids
+                    for p in res["progress"] if p["rows"]]
             record["microbatch_s"] = {
                 "median": statistics.median(trig) if trig else None, "n": len(trig),
             }
         metrics = {
-            "setup_s": {"value": setup_s},
+            "setup_s": {"value": sum(setup.values())},
             "job_s": {"value": job_s},
             "rows_per_s": {"value": rows / job_s if job_s else 0.0},
             "peak_rss_mb": {"value": peak_mb},
@@ -366,8 +370,8 @@ def main(argv=None) -> int:
         k: {"value": m["value"], "unit": units[k]} for k, m in measured.items() if k in units
     }
     # measured but not declared: zero at this input size on this host
-    # (shuffle fetch wait, spill, failed tasks, worker start after the
-    # re-warm), kept in the record
+    # (shuffle fetch wait, spill, failed tasks, worker start once the
+    # other workload's warm-up has started the workers), kept in the record
     record["undeclared"] = {k: m["value"] for k, m in measured.items() if k not in units}
     print(json.dumps(record))
     print(json.dumps(result))

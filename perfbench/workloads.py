@@ -99,6 +99,9 @@ class StreamProgress:
 
 class AssignQuery:
     name = "assign_query"
+    #: pass time falls from ~20 s to ~8 s to ~7 s over the first three
+    #: passes, then by a few percent a pass
+    warm_passes = 2
 
     def prepare(self, ctx, dest: str) -> dict:
         """Select the seed's page block and build the small dimension tables."""
@@ -108,19 +111,19 @@ class AssignQuery:
             "dims": dims["paths"],
             "extents_pdf": dims["extents_pdf"],
             "queries_pdf": dims["queries_pdf"],
+            "raster_pdf": dims["raster_pdf"],
         }
         self.load(ctx, inp)
         return inp
 
     def load(self, ctx, inp: dict) -> None:
-        """(Re)bind the input DataFrames to the current session and scan
-        the pages once."""
+        """(Re)bind the input DataFrames to the current session."""
         read = ctx.spark.read.parquet
         inp["pages"] = read(*inp["page_files"])
         inp["extents"] = read(inp["dims"]["extents"])
         inp["queries"] = read(inp["dims"]["queries"])
         inp["chunks"] = read(inp["dims"]["raster"])
-        inp["n_pages"] = inp["pages"].count()
+        inp["n_pages"] = inputs.num_rows(inp["page_files"])
 
     def sizes(self, inp: dict) -> dict:
         return {
@@ -186,6 +189,8 @@ class AssignQuery:
 
 class TextStream:
     name = "text_stream"
+    #: pass time is flat from the second pass on
+    warm_passes = 1
 
     def prepare(self, ctx, dest: str) -> dict:
         """Select the seed's docs and write its pages as a crawl feed."""
@@ -203,7 +208,7 @@ class TextStream:
     def load(self, ctx, inp: dict) -> None:
         inp["docs"] = ctx.spark.read.parquet(*inp["doc_files"])
         inp["bench"] = inputs.bench_table(inp["docs"])
-        inp["n_docs"] = inp["docs"].count()
+        inp["n_docs"] = inputs.num_rows(inp["doc_files"])
 
     def sizes(self, inp: dict) -> dict:
         return {
@@ -256,21 +261,16 @@ class TextStream:
 WORKLOADS = {w.name: w for w in (AssignQuery(), TextStream())}
 
 
-
 def check_assign_query(inp: dict, results: list[tuple[str, dict]]) -> dict[str, list[str]]:
     from perfbench import oracles
 
     oracle = oracles.GeoOracle(inp["page_files"], inp["extents_pdf"], inp["queries_pdf"])
-    out, first = {}, None
-    for pid, res in results:
-        bad = oracle.check(res, inp["n_pages"])
-        shape = (res["n_cells"], oracles.digest(oracle.con, res["zonal"]))
-        if first is None:
-            first = shape
-        elif shape != first:
-            bad.append("directory/zonal: output differs from the first pass")
-        out[pid] = bad
-    return out
+    zonal_ref = oracles.zonal_reference(inp["raster_pdf"], inp["extents_pdf"])
+    return {
+        pid: oracle.check(res, inp["n_pages"])
+        + oracles.check_zonal(oracle.con, zonal_ref, res["zonal"])
+        for pid, res in results
+    }
 
 
 def check_text_stream(inp: dict, results: list[tuple[str, dict]]) -> dict[str, list[str]]:
@@ -285,6 +285,8 @@ def check_text_stream(inp: dict, results: list[tuple[str, dict]]) -> dict[str, l
     for pid, res in results:
         bad = oracles.check_exact_dedup(con, inp["doc_files"], res["exact_dedup"])
         bad += oracles.check_decontaminate(con, inp["doc_files"], res["decontaminate"])
+        bad += oracles.check_repetition(con, inp["doc_files"], res["repetition"])
+        bad += oracles.check_entropy(con, inp["doc_files"], res["entropy"])
         bad += oracles.check_stream(con, ref, res)
         digests = {op: oracles.digest(con, res[op]) for op in ops}
         if first is None:
