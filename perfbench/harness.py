@@ -31,11 +31,11 @@ def meminfo_mb(field: str = "MemTotal") -> int:
 
 
 def driver_heap_mb() -> int:
-    """An eighth of physical RAM, between 1 and 2 GiB: the inputs are a
-    few tens of MB, the host may be shared, and a smaller heap keeps the
-    JVM's resident size from swinging with G1's young-generation
-    sizing."""
-    return max(1024, min(2048, meminfo_mb() // 8))
+    """A sixteenth of physical RAM, between 1 and 2 GiB: the inputs are a
+    few tens of MB, the host may be shared, and a smaller heap makes the
+    JVM's resident size depend less on when G1 collects the old
+    generation."""
+    return max(1024, min(2048, meminfo_mb() // 16))
 
 
 def cores() -> int:
@@ -201,6 +201,8 @@ class MemorySampler:
         self.peak_kb = 0
         self.peak_jvm_kb = 0
         self.peak_python_kb = 0
+        #: (wall time, JVM kB, Python kB) of every sample taken while active
+        self.samples: list[tuple[float, int, int]] = []
         self.active = threading.Event()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -235,6 +237,7 @@ class MemorySampler:
                     jvm += kb
                 else:
                     py += kb
+            self.samples.append((time.time(), jvm, py))
             self.peak_kb = max(self.peak_kb, jvm + py)
             self.peak_jvm_kb = max(self.peak_jvm_kb, jvm)
             self.peak_python_kb = max(self.peak_python_kb, py)
@@ -242,6 +245,12 @@ class MemorySampler:
     @property
     def peak_mb(self) -> float:
         return self.peak_kb / 1024.0
+
+    def peak_mb_between(self, start: float, end: float) -> float:
+        """Peak JVM + Python memory of the samples taken in [start, end]."""
+        return max(
+            (j + p for t, j, p in self.samples if start <= t <= end), default=0
+        ) / 1024.0
 
 
 class Tracer:

@@ -6,9 +6,9 @@ at a time, at local[<cores>].
 Run from the root of a checkout.  Set-up starts Spark, selects the
 seed's inputs and runs the workload's fixed number of warm-up passes
 (``warm_passes``); then passes run back to back for ``--seconds``, at
-least one.  The outputs of every pass, warm-up passes included, are
-checked with DuckDB afterwards (perfbench/oracles.py), so a run checks
-at least two passes.  The last line of stdout is the result JSON; the
+least ``MIN_TIMED_PASSES``, and job_s is their median.  The outputs of
+every pass, warm-up passes included, are checked with DuckDB afterwards
+(perfbench/oracles.py), so a run checks at least two passes.  The last line of stdout is the result JSON; the
 line before it is the run record (stamps, input sizes, every sample).
 
 ``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` is the
@@ -34,6 +34,9 @@ import sys
 import time
 
 REPO = os.getcwd()
+#: timed passes per untraced run, whatever --seconds says; job_s is
+#: their median, so no single pass sets it
+MIN_TIMED_PASSES = 2
 
 
 def _args(argv):
@@ -140,13 +143,13 @@ class Runner:
         for i in range(passes):
             self.one(f"{tag}{i}", timed=False)
 
-    def loop(self, seconds: float, tag: str) -> None:
-        """Closed loop: passes back to back until ``seconds`` have passed,
-        at least one."""
+    def loop(self, seconds: float, tag: str, min_passes: int = 1) -> None:
+        """Closed loop: passes back to back until ``seconds`` have passed
+        and at least ``min_passes`` have run."""
         from perfbench.harness import JvmDied
 
         t0, n = time.monotonic(), 0
-        while n == 0 or time.monotonic() - t0 < seconds:
+        while n < min_passes or time.monotonic() - t0 < seconds:
             try:
                 self.one(f"{tag}{n}")
             except JvmDied as exc:
@@ -267,11 +270,20 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
         if not args.trace:
             with MemorySampler() as mem:
                 mem.active.set()
-                own.loop(args.seconds, "t")
+                own.loop(args.seconds, "t", MIN_TIMED_PASSES)
                 mem.active.clear()
-            peak_mb = mem.peak_mb
+            # memory grows from pass to pass, so the peak over the whole
+            # window would depend on how many passes fit in it
+            per_pass = [
+                mem.peak_mb_between(s["start"], s["end"]) for s in ctx.tracer.spans
+                if s["name"] == "pass" and own.in_loop(s["pass"], "t")
+            ]
+            peak_mb = statistics.median(per_pass)
             record["peak_mb"] = {
-                "jvm": mem.peak_jvm_kb / 1024, "python": mem.peak_python_kb / 1024,
+                "window": mem.peak_mb,
+                "jvm": mem.peak_jvm_kb / 1024,
+                "python": mem.peak_python_kb / 1024,
+                "per_pass": per_pass,
             }
         else:
             alt = _prepare(ctx, next(w for w in WORKLOADS.values() if w is not wl))
@@ -318,11 +330,12 @@ def _run(args, wl, record, dirs, n_cores) -> tuple[dict, dict]:
         job_s = statistics.median(times) if times else 0.0
         rows = wl.rows(own.inp)
         timed_ids = {pid for pid, _ in own.timed}
-        layer_s: dict[str, list[float]] = {}
+        # layer times of every pass, warm-up passes included, by pass id
+        layer_s: dict[str, dict[str, float]] = {}
         for s in ctx.tracer.spans:
-            if s["pass"] in timed_ids and s["name"] != "pass":
-                layer_s.setdefault(s["name"], []).append(s["end"] - s["start"])
-        record["layer_median_s"] = {k: statistics.median(v) for k, v in layer_s.items()}
+            if s["name"] != "pass":
+                layer_s.setdefault(s["pass"], {})[s["name"]] = s["end"] - s["start"]
+        record["layer_s"] = layer_s
         record["rows_per_pass"] = rows
         if wl.name == "text_stream":
             trig = [p["duration_ms"].get("triggerExecution", 0) / 1e3

@@ -99,9 +99,9 @@ class StreamProgress:
 
 class AssignQuery:
     name = "assign_query"
-    #: pass time falls from ~20 s to ~8 s to ~7 s over the first three
-    #: passes, then by a few percent a pass
-    warm_passes = 2
+    #: the cold pass takes 2-3 times a warm one; after it, pass time
+    #: still falls by 5-10% a pass for three or four passes
+    warm_passes = 1
 
     def prepare(self, ctx, dest: str) -> dict:
         """Select the seed's page block and build the small dimension tables."""
@@ -189,7 +189,7 @@ class AssignQuery:
 
 class TextStream:
     name = "text_stream"
-    #: pass time is flat from the second pass on
+    #: as for assign_query
     warm_passes = 1
 
     def prepare(self, ctx, dest: str) -> dict:
