@@ -141,8 +141,11 @@ _TEXT_CITY_RE = re.compile(TEXT_CITY_PATTERN, re.IGNORECASE)
 #: (measured 3.6× slower).  Kept separate so _TEXT_CITY_RE still serves
 #: any raw-text call sites.
 _TEXT_CITY_CS_RE = re.compile(TEXT_CITY_PATTERN)
-_QS_LATLON_RE = re.compile(QS_LATLON_PATTERN)
-_TEXT_COORD_RE = re.compile(TEXT_COORD_PATTERN)
+#: re.ASCII: Java regex and RE2 (DuckDB) read \d and \s as ASCII
+#: classes; Python's Unicode defaults would also match e.g. Arabic-Indic
+#: digits and NBSP, which the JVM geocoder and the oracle reject
+_QS_LATLON_RE = re.compile(QS_LATLON_PATTERN, re.ASCII)
+_TEXT_COORD_RE = re.compile(TEXT_COORD_PATTERN, re.ASCII)
 _CCTLD_RE = re.compile(CCTLD_PATTERN)
 
 # ------------------------------------------------------------- extraction
@@ -167,10 +170,10 @@ _NUM_ENTITY_RE = re.compile(r"&#(\d+);")
 def strip_markup(s: pd.Series) -> pd.Series:
     """Stage 1 of the frozen extractor: comments → script/style → tags.
 
-    This stage also runs JVM-side as a codegen'd regexp_replace chain
-    (functions/udfs.py :: strip_html_expr) so the Arrow channel ships
-    stripped text, not raw html — the two implementations are tested
-    byte-equal (tests/test_pipeline.py).
+    The batch assign path runs this inside the fused enrich_struct
+    kernel.  The streaming path runs the same stage JVM-side as a
+    regexp_replace chain (functions/udfs.py :: strip_html_expr); the two
+    are tested byte-equal (tests/test_pipeline.py).
     """
     s = s.str.replace(_COMMENT_RE, " ", regex=True)
     s = s.str.replace(_SCRIPT_STYLE_RE, " ", regex=True)
@@ -219,7 +222,7 @@ def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     A row that matches a higher rule never pays the lower rules'
     regexes (the 48-slug city alternation was 62% of the kernel), and
     the two coordinate rules get a C-substring prefilter on a literal
-    their regex requires ("lat=" / ", ").  A match with out-of-range
+    their regex requires ("lat=" / ",").  A match with out-of-range
     coordinates stays UNRESOLVED and falls through to lower rules —
     exactly the old overwrite semantics.
     """
@@ -252,8 +255,9 @@ def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     # rule 1 (highest): lat/lon query-string params — the regex needs
     # the literal "lat=".
     _coords_rule(url, "lat=", _QS_LATLON_RE, "latlon_qs")
-    # rule 2: coordinate phrase in text — the regex needs ", ".
-    _coords_rule(text, ", ", _TEXT_COORD_RE, "coord_text")
+    # rule 2: coordinate phrase in text — the regex needs "," (then any
+    # \s, so not the literal ", ").
+    _coords_rule(text, ",", _TEXT_COORD_RE, "coord_text")
 
     # rule 3: url path city slug
     idx = np.flatnonzero(todo)

@@ -29,6 +29,21 @@ def _masked_int64(values: np.ndarray, ok: np.ndarray) -> pd.Series:
     out[~np.asarray(ok)] = pd.NA
     return pd.Series(out)
 
+
+def _cells(lat, lon) -> tuple[pd.Series, pd.Series]:
+    """(h3_7, s2_13) as nullable Int64 Series; NULL where lat or lon is
+    NaN."""
+    la = np.asarray(lat, dtype=np.float64)
+    lo = np.asarray(lon, dtype=np.float64)
+    ok = ~(np.isnan(la) | np.isnan(lo))
+    h3 = np.zeros(len(la), dtype=np.int64)
+    s2c = np.zeros(len(la), dtype=np.int64)
+    if ok.any():
+        h3[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
+        s2c[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
+    return _masked_int64(h3, ok), _masked_int64(s2c, ok)
+
+
 ENRICH_SCHEMA = T.StructType(
     [
         T.StructField("extracted_text", T.StringType()),
@@ -45,10 +60,11 @@ def strip_html_expr(html_col):
     """JVM-side stage 1 of the frozen extractor (comments → script/style →
     tags) as a codegen'd regexp_replace chain over the decoded html.
 
-    Channel economics (measured on this sandbox kernel): the JVM↔Python
-    Arrow socket costs ~15s/GB-ish of transfer; stripping markup JVM-side
-    cuts the shipped bytes ~3-4× before the fused Python kernel runs.
-    Byte-equal to textx.strip_markup (tested).
+    Used by the streaming path (streaming/ingest.py, ahead of
+    extract_and_cells) and by bench_extra.py.  The batch assign path
+    strips inside enrich_struct instead: CPython's re beats this
+    java.util.regex chain there (see tile_assign.enrich_pages).
+    Byte-equal to textx.strip_markup (tests/test_pipeline.py).
     """
     s = F.decode(html_col, "utf-8")
     s = F.regexp_replace(s, r"(?s)<!--.*?-->", " ")
@@ -145,20 +161,12 @@ def extract_and_cells(
 ) -> pd.DataFrame:
     """Minimal-channel fused kernel: finish extraction (entities + ws) and
     index (lat, lon) → H3/S2 — geocoding already happened JVM-side."""
-    extracted = textx.finish_extract(stripped)
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    h3 = np.zeros(len(la), dtype=np.int64)
-    s2c = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
+    h3, s2c = _cells(lat, lon)
     return pd.DataFrame(
         {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
+            "extracted_text": textx.finish_extract(stripped).to_numpy(dtype=object),
+            "h3_7": h3,
+            "s2_13": s2c,
         }
     )
 
@@ -194,21 +202,14 @@ def geocode_and_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     Same rule table, same outputs (pinned by the frozen `geocoded`
     golden hash and the cross-path equality tests)."""
     geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
+    h3, s2c = _cells(geo["lat"], geo["lon"])
     return pd.DataFrame(
         {
-            "lat": lat,
-            "lon": lon,
+            "lat": geo["lat"].to_numpy(),
+            "lon": geo["lon"].to_numpy(),
             "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
+            "h3_7": h3,
+            "s2_13": s2c,
         }
     )
 
@@ -221,73 +222,25 @@ def cells_only(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
     text-materializing kernel — the channel is syscall-bound on this
     host, so the assignments stage (whose output never includes text)
     uses this variant (enrich_pages(with_text=False))."""
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    h3 = np.zeros(len(la), dtype=np.int64)
-    s2c = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {"h3_7": _masked_int64(h3, ok), "s2_13": _masked_int64(s2c, ok)}
-    )
-
-
-@pandas_udf(ENRICH_SCHEMA)
-def enrich_from_stripped(
-    stripped: pd.Series, url: pd.Series, text: pd.Series
-) -> pd.DataFrame:
-    """Fused hot-path kernel over PRE-STRIPPED html (stage 2 of the
-    extractor + geocode + H3 res-7 + S2 level-13, one Arrow pass)."""
-    extracted = textx.finish_extract(stripped)
-    geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "lat": lat,
-            "lon": lon,
-            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            # nullable Int64 (NOT .where(..., NA): that upcasts the whole
-            # batch to float64 and corrupts int64 cell ids near 2^59)
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
-        }
-    )
+    h3, s2c = _cells(lat, lon)
+    return pd.DataFrame({"h3_7": h3, "s2_13": s2c})
 
 
 @pandas_udf(ENRICH_SCHEMA)
 def enrich_struct(html: pd.Series, url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """All-Python fused kernel (reference path; the pipeline uses
-    strip_html_expr + enrich_from_stripped — same bytes, tested equal)."""
-    extracted = textx.extract_text(html)
+    """The fused kernel of the text-materializing assign path
+    (tile_assign.enrich_pages with with_text=True): extract_text +
+    geocode + H3 res-7 + S2 level-13 over raw html in one Arrow pass."""
     geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
+    h3, s2c = _cells(geo["lat"], geo["lon"])
     return pd.DataFrame(
         {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "lat": lat,
-            "lon": lon,
+            "extracted_text": textx.extract_text(html).to_numpy(dtype=object),
+            "lat": geo["lat"].to_numpy(),
+            "lon": geo["lon"].to_numpy(),
             "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            # nullable Int64 (NOT .where(..., NA): that upcasts the whole
-            # batch to float64 and corrupts int64 cell ids near 2^59)
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
+            "h3_7": h3,
+            "s2_13": s2c,
         }
     )
 

@@ -1,4 +1,4 @@
-"""M4 — exact kNN join via two-level cell-directory pruning + ring expansion.
+"""M4 — exact kNN join via two-level cell-directory pruning.
 
 Semantics (FIXTURES.md golden): for each query point, the k nearest
 geocoded pages by exact haversine, ties broken by url ascending.
@@ -6,23 +6,33 @@ geocoded pages by exact haversine, ties broken by url ascending.
 Plan (SURVEY.md J5, adapted so exactness never depends on hex-grid edge
 geometry — see functions/h3lite.py docstring):
 
- 1. COARSE pass: roll the res-7 cell directory up to res-4 prefixes
-    (one groupBy, distributed) and collect only that — worldwide res-4
-    prefixes are O(10^4-10^5) even at 10^12 rows, vs millions of res-7
-    cells.  Per query, prune prefixes with a RIGOROUS spherical lower
-    bound to each prefix bbox (geom.sphere_min_dist_to_rect_m — exact
-    near poles and across the antimeridian, per VERDICT r1 advice) and
-    a rigorous upper bound (antipode identity); keep prefixes whose
-    lower bound ≤ D_coarse, the k-covering upper bound.
- 2. FINE pass: collect ONLY the res-7 slice of surviving prefixes
-    (filtered toPandas — the driver never sees the full directory).
-    Re-prune at res 7; final radius R = min(D_fine, D_coarse) still
-    guarantees ≥k rows inside R, and every cell outside the slice has
-    lb ≥ its prefix's lb > D_coarse ≥ R — closure is exact.
- 3. Broadcast (query_id, h3_7) candidate pairs; equi-join pages on
-    h3_7 (JVM-side); exact haversine as a Column expression (codegen,
-    no Arrow hop); Window top-k per query (Catalyst rewrites
-    row_number()<=k into per-partition top-k).
+ 1. COARSE pass (:func:`_coarse_rows`): roll the res-7 cell directory
+    up to res-4 prefixes (one groupBy, distributed) and collect only
+    that — worldwide res-4 prefixes are O(10^4-10^5) even at 10^12
+    rows, vs millions of res-7 cells.  Per query, prune prefixes with a
+    RIGOROUS spherical lower bound to each prefix bbox
+    (geom.sphere_min_dist_to_rect_m — exact near poles and across the
+    antimeridian) and a rigorous upper bound (antipode identity); keep
+    prefixes whose lower bound ≤ D_coarse, the k-covering upper bound.
+ 2. FINE pass (:func:`_fine_select`): pair each query with the res-7
+    cells of its surviving prefixes and re-prune at res 7; the final
+    radius R = min(D_fine, D_coarse) still guarantees ≥k rows inside R,
+    and every cell outside the surviving prefixes has lb ≥ its
+    prefix's lb > D_coarse ≥ R — closure is exact.
+ 3. Equi-join pages on the (query_id, h3_7) candidates (JVM-side);
+    exact haversine as a Column expression (codegen, no Arrow hop);
+    Window top-k per query (Catalyst rewrites row_number()<=k into
+    per-partition top-k).
+
+The pruning kernel is those two pandas functions, run in one of two
+places:
+
+* :func:`knn_join` runs them on the driver: it collects the queries,
+  the coarse rollup and the surviving res-7 slice, then broadcasts the
+  candidate pairs;
+* :func:`knn_join_distributed` runs them inside two ``mapInPandas``
+  stages (query partitions, then query-hash partitions of the prefix
+  equi-join), so the driver holds only the coarse rollup.
 
 The sparse tail needs no full-directory fallback: the coarse pass IS a
 global distance-ordered expansion, so a query in an empty region simply
@@ -38,7 +48,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from gips_spark.functions.geom import (
-    haversine_m,
     sphere_max_dist_to_rect_m,
     sphere_min_dist_to_rect_m,
 )
@@ -47,36 +56,14 @@ from gips_spark.functions.udfs import haversine_expr
 #: res-7 id → res-4 range-partitioning prefix (matches h3lite.cell_prefix)
 PREFIX_SHIFT = 33
 
+#: directory columns the fine selection reads per res-7 cell
+_CELL_COLS = ("h3_7", "n_rows", "min_lat", "max_lat", "min_lon", "max_lon")
+
 #: numeric slack added to covering radii: the rect bounds are exact math
 #: but IEEE arccos near ±1 carries up to ~0.1 m error (δθ≈√(2ε) as d→0),
 #: and lb/ub of a degenerate bbox come from different code paths.  1 m
 #: only widens the candidate superset; exactness is unaffected.
 _EPS_M = 1.0
-
-
-def _rect_bounds(pdf: pd.DataFrame, qla: float, qlo: float):
-    """Rigorous (lb, ub) meters from a query to every bbox row of `pdf`."""
-    args = (
-        pdf["min_lat"].to_numpy(),
-        pdf["max_lat"].to_numpy(),
-        pdf["min_lon"].to_numpy(),
-        pdf["max_lon"].to_numpy(),
-    )
-    lb = sphere_min_dist_to_rect_m(qla, qlo, *args)
-    ub = sphere_max_dist_to_rect_m(qla, qlo, *args)
-    return lb, ub
-
-
-def _covering_radius(lb: np.ndarray, ub: np.ndarray, n: np.ndarray, k: int) -> float:
-    """Smallest D = max-ub over the lb-ordered covering set with ≥k rows.
-
-    Guarantee: at least k rows lie within distance D of the query."""
-    order = np.argsort(lb, kind="stable")
-    cum = np.cumsum(n[order])
-    take = min(int(np.searchsorted(cum, k) + 1), len(order))
-    if take == 0:
-        return 0.0
-    return float(ub[order[:take]].max()) + _EPS_M
 
 
 def build_coarse_directory(directory: DataFrame, cell_col: str = "h3_7") -> DataFrame:
@@ -229,87 +216,33 @@ def _coarse_prune_block(
     return s_rows[keep], c_ids[s_cols[keep]], dc
 
 
-def _surviving_slice(
-    directory: DataFrame, queries_pdf: pd.DataFrame
-) -> tuple[pd.DataFrame, dict, dict, int]:
-    """Coarse(res-4) pruning shared by both kNN plans: returns the
-    collected res-7 slice of SURVIVING prefixes only (the driver never
-    sees the full directory), the per-query surviving-prefix sets, the
-    per-query coarse covering radii, and the coarse rollup size."""
-    coarse_pdf = build_coarse_directory(directory).toPandas()
-    c_arrays = _coarse_arrays(coarse_pdf)
-
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    qids = queries_pdf["query_id"].to_numpy()
-
-    surviving: dict[object, np.ndarray] = {}
-    d_coarse: dict[object, float] = {}
-    union: set[int] = set()
+def _coarse_rows(c_arrays, queries_pdf: pd.DataFrame) -> pd.DataFrame:
+    """Coarse (res-4) pruning of a (query_id, lat, lon, k) frame, BLOCK
+    queries at a time: one row per (query, surviving prefix) with
+    columns (query_id, lat, lon, k, prefix, d_coarse), where d_coarse
+    is the query's coarse covering radius.  knn_join runs it on the
+    driver, knn_join_distributed inside its coarse mapInPandas stage."""
+    q_lat = queries_pdf["lat"].to_numpy(np.float64)
+    q_lon = queries_pdf["lon"].to_numpy(np.float64)
+    q_k = queries_pdf["k"].to_numpy(np.int64)
+    g, prefs, dcs = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
     for b0 in range(0, len(q_lat), BLOCK):
-        sl = slice(b0, min(b0 + BLOCK, len(q_lat)))
-        rows, prefs, dc = _coarse_prune_block(
-            c_arrays, q_lat[sl], q_lon[sl], q_k[sl]
-        )
-        counts = np.bincount(rows, minlength=dc.shape[0])
-        for i, keep in enumerate(np.split(prefs, np.cumsum(counts)[:-1])):
-            surviving[qids[b0 + i]] = keep
-            d_coarse[qids[b0 + i]] = float(dc[i])
-        union.update(int(p) for p in np.unique(prefs))
-
-    slice_df = directory.where(
-        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).isin(sorted(union))
+        sl = slice(b0, b0 + BLOCK)
+        rows, p, dc = _coarse_prune_block(c_arrays, q_lat[sl], q_lon[sl], q_k[sl])
+        g.append(b0 + rows)
+        prefs.append(p)
+        dcs.append(dc[rows])
+    g = np.concatenate(g)
+    return pd.DataFrame(
+        {
+            "query_id": queries_pdf["query_id"].to_numpy()[g],
+            "lat": q_lat[g],
+            "lon": q_lon[g],
+            "k": q_k[g],
+            "prefix": np.concatenate(prefs),
+            "d_coarse": np.concatenate(dcs),
+        }
     )
-    slice_pdf = slice_df.toPandas()
-    return slice_pdf, surviving, d_coarse, len(coarse_pdf)
-
-
-def _fine_pairs(slice_pdf: pd.DataFrame, queries_pdf: pd.DataFrame, surviving: dict):
-    """(query, slice-cell) pairs restricted to each query's surviving
-    prefixes, with rigorous rect bounds computed in ONE vectorized call
-    over all pairs (VERDICT r3 next #2 — no per-query _rect_bounds).
-
-    Returns arrays sorted by (query_idx, lb): (qi, ci, lb, ub, n,
-    seg_starts, seg_counts) where qi indexes queries_pdf positionally,
-    ci indexes slice_pdf rows, and seg_starts/seg_counts delimit each
-    query's contiguous segment (counts may be 0)."""
-    f_ids = slice_pdf["h3_7"].to_numpy()
-    f_pref = f_ids >> PREFIX_SHIFT
-    Q = len(queries_pdf)
-    surv_qi = np.concatenate(
-        [np.full(len(surviving[qid]), i, dtype=np.int64)
-         for i, qid in enumerate(queries_pdf["query_id"])]
-        or [np.empty(0, np.int64)]
-    )
-    surv_pref = np.concatenate(
-        [np.asarray(surviving[qid], dtype=np.int64)
-         for qid in queries_pdf["query_id"]]
-        or [np.empty(0, np.int64)]
-    )
-    pairs = pd.DataFrame({"qi": surv_qi, "pref": surv_pref}).merge(
-        pd.DataFrame({"pref": f_pref, "ci": np.arange(len(slice_pdf))}), on="pref"
-    )
-    qi = pairs["qi"].to_numpy()
-    ci = pairs["ci"].to_numpy()
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    la1 = slice_pdf["min_lat"].to_numpy()
-    la2 = slice_pdf["max_lat"].to_numpy()
-    lo1 = slice_pdf["min_lon"].to_numpy()
-    lo2 = slice_pdf["max_lon"].to_numpy()
-    lb = sphere_min_dist_to_rect_m(
-        q_lat[qi], q_lon[qi], la1[ci], la2[ci], lo1[ci], lo2[ci]
-    )
-    ub = sphere_max_dist_to_rect_m(
-        q_lat[qi], q_lon[qi], la1[ci], la2[ci], lo1[ci], lo2[ci]
-    )
-    o = np.lexsort((lb, qi))
-    qi, ci, lb, ub = qi[o], ci[o], lb[o], ub[o]
-    n = slice_pdf["n_rows"].to_numpy()[ci]
-    seg_counts = np.bincount(qi, minlength=Q)
-    seg_starts = np.concatenate([[0], np.cumsum(seg_counts)[:-1]])
-    return qi, ci, lb, ub, n, seg_starts, seg_counts
 
 
 def _covering_radii_seg(
@@ -317,9 +250,10 @@ def _covering_radii_seg(
     qi: np.ndarray, seg_starts: np.ndarray, seg_counts: np.ndarray,
     q_k: np.ndarray,
 ) -> np.ndarray:
-    """Per-query covering radius over lb-sorted segments — the
-    vectorized form of :func:`_covering_radius` across all queries at
-    once (argsort is pre-done by _fine_pairs' lexsort; here cumsum /
+    """Per-query covering radius over lb-sorted segments: the smallest
+    D = max ub over the lb-ordered prefix of the segment holding ≥k
+    rows, so at least k rows lie within D of the query.  All queries at
+    once (argsort is pre-done by _fine_select's lexsort; here cumsum /
     searchsorted / max run as segment ops)."""
     Q = len(seg_counts)
     if len(lb) == 0:
@@ -340,36 +274,61 @@ def _covering_radii_seg(
     return np.where(seg_counts > 0, radii + _EPS_M, 0.0)
 
 
+def _fine_select(pairs_pdf: pd.DataFrame) -> pd.DataFrame:
+    """Fine (res-7) selection over (query, cell) pairs: the rows of
+    _coarse_rows joined on prefix with the directory's res-7 cells
+    (h3_7, n_rows and bbox).  Computes each pair's rigorous rect bounds,
+    the per-query fine covering radius d_fine, and keeps the cells with
+    lb ≤ min(d_fine, d_coarse).  Both radii cover ≥k rows, and every
+    cell outside the surviving prefixes has lb > d_coarse, so the kept
+    cells hold the exact k nearest.  → (query_id, h3_7)."""
+    if pairs_pdf.empty:
+        return pairs_pdf[["query_id", "h3_7"]]
+    codes, uniques = pd.factorize(pairs_pdf["query_id"], sort=False)
+    args = [
+        pairs_pdf[c].to_numpy(np.float64)
+        for c in ("lat", "lon", "min_lat", "max_lat", "min_lon", "max_lon")
+    ]
+    lb = sphere_min_dist_to_rect_m(*args)
+    ub = sphere_max_dist_to_rect_m(*args)
+    o = np.lexsort((lb, codes))
+    qi, lb, ub = codes[o], lb[o], ub[o]
+    seg_counts = np.bincount(qi, minlength=len(uniques))
+    seg_starts = np.concatenate([[0], np.cumsum(seg_counts)[:-1]])
+    first = o[seg_starts]
+    d_fine = _covering_radii_seg(
+        lb, ub, pairs_pdf["n_rows"].to_numpy()[o], qi, seg_starts, seg_counts,
+        pairs_pdf["k"].to_numpy(np.int64)[first],
+    )
+    radius = np.minimum(d_fine, pairs_pdf["d_coarse"].to_numpy()[first])
+    sel = lb <= radius[qi]
+    return pd.DataFrame(
+        {
+            "query_id": np.asarray(uniques)[qi[sel]],
+            "h3_7": pairs_pdf["h3_7"].to_numpy()[o[sel]],
+        }
+    )
+
+
 def _two_level_candidates(
     spark, directory: DataFrame, queries_pdf: pd.DataFrame
 ) -> tuple[pd.DataFrame, dict]:
-    """Coarse(res-4)→fine(res-7) pruning; collects only the surviving
-    res-7 slice.  Returns (candidates(query_id, h3_7), stats)."""
-    slice_pdf, surviving, d_coarse, n_coarse = _surviving_slice(
-        directory, queries_pdf
+    """Driver-side coarse(res-4)→fine(res-7) pruning.  Collects the
+    coarse rollup, then only the res-7 slice of surviving prefixes (the
+    driver never sees the full directory).  Returns
+    (candidates(query_id, h3_7), stats)."""
+    coarse_pdf = build_coarse_directory(directory).toPandas()
+    surv = _coarse_rows(_coarse_arrays(coarse_pdf), queries_pdf)
+    slice_pdf = directory.where(
+        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).isin(
+            np.unique(surv["prefix"]).tolist()
+        )
+    ).toPandas()
+    cells = slice_pdf[list(_CELL_COLS)].assign(
+        prefix=slice_pdf["h3_7"].to_numpy() >> PREFIX_SHIFT
     )
-    qi, ci, lb, ub, n, seg_starts, seg_counts = _fine_pairs(
-        slice_pdf, queries_pdf, surviving
-    )
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    d_fine = _covering_radii_seg(lb, ub, n, qi, seg_starts, seg_counts, q_k)
-    dc = np.asarray(
-        [d_coarse[qid] for qid in queries_pdf["query_id"]], dtype=np.float64
-    )
-    radius = np.minimum(d_fine, dc)
-    sel = lb <= radius[qi]
-    out = pd.DataFrame(
-        {
-            "query_id": queries_pdf["query_id"].to_numpy()[qi[sel]],
-            "h3_7": slice_pdf["h3_7"].to_numpy()[ci[sel]],
-        }
-    )
-    stats = {
-        "n_coarse": n_coarse,
-        "n_slice": len(slice_pdf),
-        "slice_rows_collected": int(len(slice_pdf)),
-    }
-    return out, stats
+    stats = {"n_coarse": len(coarse_pdf), "slice_rows_collected": len(slice_pdf)}
+    return _fine_select(surv.merge(cells, on="prefix")), stats
 
 
 def _topk(joined: DataFrame) -> DataFrame:
@@ -409,96 +368,12 @@ def knn_join(
 ) -> DataFrame:
     """→ (query_id, rank, url, dist_m) — exact kNN, ties by url asc.
 
-    Two-level (res-4 → res-7) directory pruning; the driver collects
-    only the coarse rollup + the surviving res-7 slice."""
+    Two-level (res-4 → res-7) directory pruning on the driver; it
+    collects the queries, the coarse rollup and the surviving res-7
+    slice, then broadcasts the candidate pairs."""
     queries_pdf = queries.toPandas()
     cand_pdf, _ = _two_level_candidates(spark, directory, queries_pdf)
     cand = spark.createDataFrame(cand_pdf)
-    return _topk(_join_candidates(enriched, queries, cand))
-
-
-def _kring_candidates(
-    slice_pdf: pd.DataFrame,
-    queries_pdf: pd.DataFrame,
-    surviving: dict,
-    d_coarse: dict,
-) -> pd.DataFrame:
-    """H3 k-ring candidate generation (the literal SURVEY.md J5 plan),
-    scale-fixed (VERDICT r2 'What's wrong' #1): operates on the
-    coarse-pruned SURVIVING slice only — never the full directory —
-    and rect bounds are computed per query on that query's surviving
-    subset (O(q·slice), not O(q·all-cells)).
-
-    Per query: expand rings around the query's cell until the occupied
-    (slice) cells hold ≥k rows, then CLOSE the candidate set with the
-    rigorous directory distance bound.  The closure radius is capped
-    at D_coarse (also a valid ≥k covering radius), so every cell with
-    lb ≤ radius has prefix-lb ≤ D_coarse and therefore lies inside the
-    surviving slice — exactness never depends on hex-edge geometry."""
-    from gips_spark.functions import cellindex
-
-    f_ids = slice_pdf["h3_7"].to_numpy()
-    qi, ci, lb_all, ub_all, n_all, seg_starts, seg_counts = _fine_pairs(
-        slice_pdf, queries_pdf, surviving
-    )
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    qids = queries_pdf["query_id"].to_numpy()
-    qcells = cellindex.latlng_to_cell(q_lat, q_lon, 7)
-    # fallback radii for the sparse-tail / cross-face-gap path, all
-    # queries at once (rect bounds + covering already vectorized; the
-    # remaining per-query work is ONLY the intrinsically sequential
-    # ring expansion over that query's occupied-cell set)
-    d_cover = _covering_radii_seg(
-        lb_all, ub_all, n_all, qi, seg_starts, seg_counts, q_k
-    )
-    out_q, out_c = [], []
-    for i in range(len(queries_pdf)):
-        if seg_counts[i] == 0:
-            continue
-        seg = slice(seg_starts[i], seg_starts[i] + seg_counts[i])
-        ids = f_ids[ci[seg]]
-        lb, ub, n_rows = lb_all[seg], ub_all[seg], n_all[seg]
-        n_by_cell = dict(zip(ids.tolist(), n_rows.tolist()))
-        k = int(q_k[i])
-        r = 0
-        ring_cells: list[int] = []
-        while r <= 64:
-            ring_cells = [
-                c for c in cellindex.k_ring(int(qcells[i]), r).tolist()
-                if c in n_by_cell
-            ]
-            if sum(n_by_cell[c] for c in ring_cells) >= k:
-                break
-            r += 1
-        if not ring_cells or sum(n_by_cell[c] for c in ring_cells) < k:
-            # sparse tail / cross-face gap: distance-ordered covering on
-            # the surviving subset (which holds ≥k rows by construction
-            # of the coarse covering — VERDICT r1 'What's wrong' #4)
-            radius = float(d_cover[i])
-        else:
-            sel = np.isin(ids, np.asarray(ring_cells, dtype=np.int64))
-            radius = float(ub[sel].max()) + _EPS_M
-        radius = min(radius, d_coarse[qids[i]])
-        cand = ids[lb <= radius]
-        out_q.extend([qids[i]] * len(cand))
-        out_c.extend(cand.tolist())
-    return pd.DataFrame({"query_id": out_q, "h3_7": out_c})
-
-
-def knn_join_kring(
-    spark, enriched: DataFrame, queries: DataFrame, directory: DataFrame
-) -> DataFrame:
-    """kNN via H3 k-ring expansion + broadcast candidate pruning (same
-    output contract as knn_join; tested equal to brute force).  The
-    ring closure runs on the coarse-pruned surviving slice — no
-    full-directory collect (VERDICT r2 #3)."""
-    queries_pdf = queries.toPandas()
-    slice_pdf, surviving, d_coarse, _ = _surviving_slice(directory, queries_pdf)
-    cand = spark.createDataFrame(
-        _kring_candidates(slice_pdf, queries_pdf, surviving, d_coarse)
-    )
     return _topk(_join_candidates(enriched, queries, cand))
 
 
@@ -513,13 +388,13 @@ def knn_join_distributed(
     """kNN for query sets beyond driver memory (VERDICT r3 missing #5 /
     next #8): NO ``queries.toPandas()`` anywhere —
 
-    1. coarse per-query pruning runs INSIDE executors over query
-       partitions (mapInPandas; only the res-4 rollup — O(1e4-1e5)
-       rows worldwide — is collected and broadcast), emitting one row
-       per (query, surviving prefix);
+    1. coarse per-query pruning (_coarse_rows) runs INSIDE executors
+       over query partitions (mapInPandas; only the res-4 rollup —
+       O(1e4-1e5) rows worldwide — is collected and broadcast),
+       emitting one row per (query, surviving prefix);
     2. fine pruning is a DISTRIBUTED prefix equi-join against the res-7
        directory, then mapInPandas over query-hash partitions running
-       the same vectorized segment covering as the driver path;
+       _fine_select, the same kernel as the driver path;
     3. the candidate join runs shuffle-side on h3_7 then query_id (no
        driver broadcast of per-query candidates, which scales with
        query count).
@@ -554,33 +429,12 @@ def knn_join_distributed(
     def coarse_stage(it):
         c_arrays = _coarse_arrays(bc.value)
         for pdf in it:
-            if not len(pdf):
-                continue
-            q_lat = pdf["lat"].to_numpy(np.float64)
-            q_lon = pdf["lon"].to_numpy(np.float64)
-            q_k = pdf["k"].to_numpy(np.int64)
-            qids = pdf["query_id"].to_numpy()
-            for b0 in range(0, len(pdf), BLOCK):
-                sl = slice(b0, min(b0 + BLOCK, len(pdf)))
-                rows, prefs, dc = _coarse_prune_block(
-                    c_arrays, q_lat[sl], q_lon[sl], q_k[sl]
-                )
-                g = b0 + rows
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[g],
-                        "lat": q_lat[g],
-                        "lon": q_lon[g],
-                        "k": q_k[g],
-                        "prefix": prefs,
-                        "d_coarse": dc[rows],
-                    }
-                )
+            if len(pdf):
+                yield _coarse_rows(c_arrays, pdf)
 
     surv = q0.repartition(query_parts).mapInPandas(coarse_stage, surv_schema)
     dir2 = directory.select(
-        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).alias("prefix"),
-        "h3_7", "n_rows", "min_lat", "max_lat", "min_lon", "max_lon",
+        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).alias("prefix"), *_CELL_COLS
     )
     paired = surv.join(dir2, "prefix")
 
@@ -591,38 +445,8 @@ def knn_join_distributed(
         # query_id below), so concatenating the partition's batches is
         # bounded by partition sizing, not query-set size
         chunks = [pdf for pdf in it if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        codes, uniques = pd.factorize(pdf["query_id"], sort=False)
-        lb = sphere_min_dist_to_rect_m(
-            pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
-            pdf["min_lat"].to_numpy(), pdf["max_lat"].to_numpy(),
-            pdf["min_lon"].to_numpy(), pdf["max_lon"].to_numpy(),
-        )
-        ub = sphere_max_dist_to_rect_m(
-            pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
-            pdf["min_lat"].to_numpy(), pdf["max_lat"].to_numpy(),
-            pdf["min_lon"].to_numpy(), pdf["max_lon"].to_numpy(),
-        )
-        o = np.lexsort((lb, codes))
-        qi = codes[o]
-        lb_s, ub_s = lb[o], ub[o]
-        n_s = pdf["n_rows"].to_numpy()[o]
-        ids_s = pdf["h3_7"].to_numpy()[o]
-        Q = len(uniques)
-        seg_counts = np.bincount(qi, minlength=Q)
-        seg_starts = np.concatenate([[0], np.cumsum(seg_counts)[:-1]])
-        k_u = pdf["k"].to_numpy(np.int64)[o][seg_starts]
-        dc_u = pdf["d_coarse"].to_numpy()[o][seg_starts]
-        d_fine = _covering_radii_seg(
-            lb_s, ub_s, n_s, qi, seg_starts, seg_counts, k_u
-        )
-        radius = np.minimum(d_fine, dc_u)
-        sel = lb_s <= radius[qi]
-        yield pd.DataFrame(
-            {"query_id": np.asarray(uniques)[qi[sel]], "h3_7": ids_s[sel]}
-        )
+        if chunks:
+            yield _fine_select(pd.concat(chunks, ignore_index=True))
 
     cand = paired.repartition(query_parts, "query_id").mapInPandas(
         fine_stage, cand_schema

@@ -37,6 +37,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     in-sandbox; on a cluster pass ``None`` and let spark-submit decide.
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` when set, else about
+    half of physical RAM.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -50,13 +52,28 @@ def get_spark(
     builder = builder.config("spark.default.parallelism", str(n_shuffle))
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """About half of physical RAM (MemTotal in /proc/meminfo), so the
+    JVM heap plus Python workers fit on a host without swap; 16g where
+    /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
 
 
 def _parallelism_of(master: str, default: int) -> int:

@@ -12,11 +12,30 @@ from gips_spark import get_spark
 from gips_spark.sources import fixtures
 
 
+def _jvm_exit_code():
+    """Exit code of this process's Spark gateway JVM, or None while it
+    runs (or before one was launched)."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    return None if proc is None else proc.poll()
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_runtest_setup(item):
+    # a killed JVM (e.g. by the kernel OOM killer) would otherwise show
+    # up as a ConnectionRefusedError in every later Spark test
+    rc = _jvm_exit_code()
+    if rc is not None:
+        pytest.exit(f"Spark JVM died (exit code {rc}) before {item.nodeid}", returncode=3)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("gips-tests", master="local[4]", shuffle_partitions=8)
     yield s
-    s.stop()
+    if _jvm_exit_code() is None:
+        s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -143,17 +143,6 @@ def test_knn_exact_vs_bruteforce(spark, enriched, directory):
         assert per_q.get(qid, 0) == min(k, n_pts)
 
 
-def test_knn_kring_variant_exact(spark, enriched, directory):
-    """The literal J5 plan (H3 k-ring expansion + closure) is also exact."""
-    from gips_spark.sources import fixtures
-
-    q = fixtures.gen_knn_queries(spark)
-    a = knn.knn_join_kring(spark, enriched, q, directory).cache()
-    b = knn.knn_bruteforce(enriched, q).cache()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_coverage_fractions(spark, enriched, extents, directory):
     cov = pip_join.coverage_fractions(spark, enriched, extents, directory).cache()
     sums = cov.groupBy("extent_id").agg(F.sum("pcov").alias("s")).collect()
@@ -292,40 +281,26 @@ def test_knn_driver_pruning_1e4_queries_fast():
         }
     )
 
-    q_lat = queries_pdf["lat"].to_numpy()
-    q_lon = queries_pdf["lon"].to_numpy()
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    qids = queries_pdf["query_id"].to_numpy()
     # best-of-3: host noise is strictly additive (bursty-CPU gusts), so
     # the min over interleaved trials is the clean estimate
     trials = []
     for _ in range(3):
         t0 = time.monotonic()
-        c_arrays = knn._coarse_arrays(coarse_pdf)
-        surviving, d_coarse = {}, {}
-        for b0 in range(0, n_q, knn.BLOCK):
-            sl = slice(b0, min(b0 + knn.BLOCK, n_q))
-            rows, prefs, dc = knn._coarse_prune_block(
-                c_arrays, q_lat[sl], q_lon[sl], q_k[sl]
-            )
-            counts = np.bincount(rows, minlength=dc.shape[0])
-            for i, keep in enumerate(np.split(prefs, np.cumsum(counts)[:-1])):
-                surviving[qids[b0 + i]] = keep
-                d_coarse[qids[b0 + i]] = float(dc[i])
-        qi, ci, lb, ub, nn, seg_starts, seg_counts = knn._fine_pairs(
-            slice_pdf, queries_pdf, surviving
+        cells = slice_pdf.assign(
+            prefix=slice_pdf["h3_7"].to_numpy() >> knn.PREFIX_SHIFT
         )
-        d_fine = knn._covering_radii_seg(
-            lb, ub, nn, qi, seg_starts, seg_counts, q_k
-        )
+        surv = knn._coarse_rows(knn._coarse_arrays(coarse_pdf), queries_pdf)
+        pairs = surv.merge(cells, on="prefix")
+        cand = knn._fine_select(pairs)
         trials.append(time.monotonic() - t0)
     elapsed = min(trials)
     print(f"\ndriver pruning for {n_q} queries: best-of-3 {elapsed:.2f}s {trials}")
     assert elapsed < 6.0, f"{trials}"
-    # sanity: every query got a surviving set and a positive fine radius
-    assert len(surviving) == n_q
-    assert (d_fine > 0).all()
-    assert all(len(v) > 0 for v in surviving.values())
+    # sanity: every query got a surviving prefix and a non-empty fine
+    # segment (so a positive fine radius), and some cells were kept
+    assert surv["query_id"].nunique() == n_q
+    assert pairs["query_id"].nunique() == n_q
+    assert len(cand) > 0
 
 
 def test_knn_distributed_exact_vs_bruteforce(spark, enriched, directory):
@@ -357,10 +332,28 @@ def test_knn_distributed_1e5_queries(spark, enriched, directory):
         }
     )
     q = spark.createDataFrame(qpdf).repartition(8).cache()
-    a = knn.knn_join_distributed(spark, enriched, q, directory).cache()
-    b = knn.knn_bruteforce(enriched, q).cache()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    key = ["query_id", "rank"]
+    got = knn.knn_join_distributed(spark, enriched, q, directory).toPandas()
+    # the brute-force oracle runs 10^4 queries at a time, each block
+    # collected before the next starts: one cross join of all 10^5
+    # queries × the points grows the JVM heap past a 15 GiB host
+    blk = 10_000
+    want = pd.concat(
+        [
+            knn.knn_bruteforce(
+                enriched, spark.createDataFrame(qpdf.iloc[b0:b0 + blk])
+            ).toPandas()
+            for b0 in range(0, n_q, blk)
+        ],
+        ignore_index=True,
+    )
+    assert want["query_id"].nunique() == n_q
+    # exact equality on (query_id, rank, url, dist_m), both directions
+    pd.testing.assert_frame_equal(
+        got.sort_values(key, ignore_index=True),
+        want.sort_values(key, ignore_index=True),
+        check_exact=True,
+    )
 
 
 def test_knn_distributed_planted_hotspot_skew(spark, enriched, directory):

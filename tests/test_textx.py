@@ -4,6 +4,19 @@ import pandas as pd
 
 from gips_spark.functions import textx
 
+#: coordinate phrases whose separator is not a plain ", " or whose
+#: digits are not ASCII.  Java regex and RE2 (DuckDB) read `\s` and
+#: `\d` as ASCII classes, so tab and newline match, NBSP and
+#: Arabic-Indic digits do not; the Python kernel must agree.
+EDGE_URL = "https://a.example.com/x"
+EDGE_COORD_ROWS = [
+    ("at 41.8719,\t12.5674 here", "coord_text"),
+    ("at 41.8719,\n12.5674 here", "coord_text"),
+    ("at 41.8719,\u00a012.5674 here", "none"),
+    ("at \u0664\u0661.\u0668\u0667\u0661\u0669, "
+     "\u0661\u0662.\u0665\u0666\u0667\u0664 here", "none"),
+]
+
 
 def test_extract_text_golden():
     """Frozen extractor contract — byte-identical outputs (input_hint)."""
@@ -75,7 +88,7 @@ def test_geocode_masked_evaluation_fall_through():
     """r6 (masked highest-priority-first rewrite): an out-of-range match
     in a HIGHER tier must leave the row unresolved for LOWER tiers —
     the exact overwrite semantics of the r5 lowest-first implementation
-    — and the literal prefilters ("lat=", ", ") must never drop a row
+    — and the literal prefilters ("lat=", ",") must never drop a row
     the regex would match."""
     url = pd.Series(
         [
@@ -105,6 +118,23 @@ def test_geocode_masked_evaluation_fall_through():
     # non-RangeIndex input (sliced batch) must not misalign rows
     got2 = textx.geocode(url.iloc[[2, 3]], text.iloc[[2, 3]])
     assert got2["geocode_src"].tolist() == ["latlon_qs", "city_text"]
+    # "," followed by whitespace other than a space passes the
+    # prefilter; Unicode-only whitespace and digits do not match, as in
+    # Java regex and DuckDB (RE2)
+    import duckdb
+
+    texts = [t for t, _ in EDGE_COORD_ROWS]
+    want = [s for _, s in EDGE_COORD_ROWS]
+    got3 = textx.geocode(pd.Series([EDGE_URL] * len(texts)), pd.Series(texts))
+    assert got3["geocode_src"].tolist() == want
+    hit = got3["geocode_src"] == "coord_text"
+    assert (got3.loc[hit, "lat"] == 41.8719).all()
+    assert (got3.loc[hit, "lon"] == 12.5674).all()
+    duck = duckdb.execute(
+        "select regexp_matches(t, ?) from unnest(?) as u(t)",
+        [textx.TEXT_COORD_PATTERN, texts],
+    ).fetchall()
+    assert [r[0] for r in duck] == [s == "coord_text" for s in want]
 
 
 def test_lang_id():
@@ -178,14 +208,20 @@ def test_geocode_jvm_matches_python(spark, pages):
     from gips_spark.functions import udfs
 
     glat, glon, gsrc = udfs.geocode_exprs(F.col("url"), F.col("text"))
+    edge = spark.createDataFrame(
+        [(EDGE_URL, t) for t, _ in EDGE_COORD_ROWS], "url string, text string"
+    )
     pdf = (
-        pages.limit(800)
+        pages.limit(800).select("url", "text").unionAll(edge)
         .select("url", "text", glat.alias("jlat"), glon.alias("jlon"),
                 gsrc.alias("jsrc"))
         .toPandas()
     )
     py = textx.geocode(pdf["url"], pdf["text"])
     assert pdf["jsrc"].tolist() == py["geocode_src"].tolist()
+    assert pdf["jsrc"].tolist()[-len(EDGE_COORD_ROWS):] == [
+        s for _, s in EDGE_COORD_ROWS
+    ]
     for jc, pc in (("jlat", "lat"), ("jlon", "lon")):
         a = pdf[jc].to_numpy(dtype=float)
         b = py[pc].to_numpy(dtype=float)
